@@ -186,9 +186,9 @@ def q_f1_exists_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_s1_time_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = Query(t_start=T0, t_end=T1)
-    from zx_spark.compiler import _scan
+    from zx_spark.compiler import scan_filter
 
-    return _id_set_agg(_scan(_events(spark, sf_dir), q, "ts"))
+    return _id_set_agg(scan_filter(_events(spark, sf_dir), q, "ts"))
 
 
 def q_g1_group_core(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4198,7 +4198,7 @@ def _decontaminate_oracle(n: int = 5, excerpt_words: int = 40, min_docs: int = 2
 def _minhash_oracle(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) -> str:
     """The FULL MinHash-LSH pipeline in DuckDB SQL — possible because the
     Spark side deliberately uses an md5-derived base hash + affine family
-    (dedup.py base_hash/minhash_signature): shingle → signature → band
+    (dedup.py base_hash/minhash_from_shingles): shingle → signature → band
     string keys → candidate self-join → exact-Jaccard verify, with the
     affine coefficients interpolated from the same constants."""
     from zx_spark.operators.dedup import _MERSENNE, _MINHASH_A, _MINHASH_B

@@ -299,9 +299,9 @@ def test_registry_strict_hint_audit(spark, registry_frames):
     failures = []
     for name in sorted(_pools()):
         base = name.rsplit("_v", 1)[0]
-        df = registry_frames(name)
         bk = _BOUNDED_KEYS.get(name, _BOUNDED_KEYS.get(base, ()))
         try:
+            df = registry_frames(name)
             if name in HINTED_UNTRUSTED_OK:
                 rep = assert_bounded_broadcasts(df, bounded_keys=bk)
                 hinted = [
@@ -314,6 +314,6 @@ def test_registry_strict_hint_audit(spark, registry_frames):
                 )
             else:
                 assert_bounded_broadcasts(df, bounded_keys=bk, fail_hinted=True)
-        except AssertionError as e:
-            failures.append(f"{name}: {e}")
+        except Exception as e:  # a frame that fails to build fails too
+            failures.append(f"{name}: {type(e).__name__}: {e}")
     assert not failures, "strict hint audit failures:\n" + "\n".join(failures)

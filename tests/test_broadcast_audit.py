@@ -215,12 +215,12 @@ def test_extra_operator_plans_no_data_sized_broadcast(spark):
 
     docs = _docs(spark).select("doc_id", "text")
     frames = {
-        "drop_boilerplate_docs": drop_boilerplate_docs(docs),
-        "scrub_repeated_lines[join]": scrub_repeated_lines(
+        "drop_boilerplate_docs": lambda: drop_boilerplate_docs(docs),
+        "scrub_repeated_lines[join]": lambda: scrub_repeated_lines(
             docs, method="join"
         ),
-        "strip_duplicated_spans": strip_duplicated_spans(docs),
-        "resolve_entities": resolve_entities(
+        "strip_duplicated_spans": lambda: strip_duplicated_spans(docs),
+        "resolve_entities": lambda: resolve_entities(
             docs.select(
                 "doc_id", F.substring("text", 1, 24).alias("name")
             ),
@@ -228,11 +228,13 @@ def test_extra_operator_plans_no_data_sized_broadcast(spark):
             "doc_id",
         ),
     }
-    for name, df in frames.items():
+    failures = []
+    for name, build in frames.items():
         try:
-            assert_bounded_broadcasts(df)
-        except AssertionError as e:
-            raise AssertionError(f"{name}: {e}") from e
+            assert_bounded_broadcasts(build())
+        except Exception as e:  # a frame that fails to build fails too
+            failures.append(f"{name}: {type(e).__name__}: {e}")
+    assert not failures, "operator bound audit failures:\n" + "\n".join(failures)
 
 
 # ------------------------------------------------------- full registry sweep
@@ -273,8 +275,8 @@ def test_registry_plan_broadcasts_bounded(spark, registry_frames):
                 bounded_keys=_BOUNDED_KEYS.get(name, ()),
                 dim_tables=_DIM_TABLES.get(name, ()),
             )
-        except AssertionError as e:
-            failures.append(f"{name}: {e}")
+        except Exception as e:  # a frame that fails to build fails too
+            failures.append(f"{name}: {type(e).__name__}: {e}")
     assert not failures, "bound audit failures:\n" + "\n".join(failures)
 
 
@@ -300,6 +302,6 @@ def test_bench_compat_plan_broadcasts_bounded(spark, registry_frames):
                 bounded_keys=_BOUNDED_KEYS.get(name, _BOUNDED_KEYS.get(base, ())),
                 dim_tables=_DIM_TABLES.get(name, _DIM_TABLES.get(base, ())),
             )
-        except AssertionError as e:
-            failures.append(f"{name}: {e}")
+        except Exception as e:  # a frame that fails to build fails too
+            failures.append(f"{name}: {type(e).__name__}: {e}")
     assert not failures, "compat bound audit failures:\n" + "\n".join(failures)

@@ -120,3 +120,29 @@ def test_compact_recovers_from_interrupted_swap(spark, events, tmp_path):
     os.rename(path, path + "__compact_old")
     report = compact_store(spark, path, target_file_mb=256)
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+
+
+def _sparse_store(spark, path):
+    """Full-schema rows on 2024-01-02, then one late sparse row (no
+    ``tag``) on 2024-01-01: a plain read takes the schema of one file."""
+    full = spark.createDataFrame(
+        [(1, 1704160800, 1.0, "a"), (2, 1704164400, 2.0, "b")],
+        "event_id long, ts_s long, value double, tag string",
+    )
+    late = spark.createDataFrame([(3, 1704074400, 3.0)], "event_id long, ts_s long, value double")
+    for df in (full, late):
+        write_events(df.withColumn("ts", F.timestamp_seconds("ts_s")).drop("ts_s"), path)
+
+
+def test_compaction_keeps_sparse_columns(spark, tmp_path):
+    from zx_spark.api import ZX
+
+    path = str(tmp_path / "sparse")
+    _sparse_store(spark, path)
+    compact_store(spark, path)
+    merged = spark.read.option("mergeSchema", "true").parquet(path)
+    assert "tag" in merged.columns
+    got = ZX(spark, events_path=path, id_col="event_id").sql(
+        "select count(value) group by tag"
+    )
+    assert sorted(got) == ['{"tag": "__nil"}', '{"tag": "a"}', '{"tag": "b"}']

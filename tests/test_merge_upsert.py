@@ -103,3 +103,21 @@ def test_validation(spark, store):
     good = spark.createDataFrame([(1, "a", 1.0)], "k long, part string, v double")
     with pytest.raises(ValueError, match="key_cols"):
         merge_upsert(spark, store, good, [])
+
+
+def test_merge_keeps_sparse_columns(spark, tmp_path):
+    from tests.test_compaction import _sparse_store
+
+    path = str(tmp_path / "sparse")
+    _sparse_store(spark, path)
+    upd = spark.createDataFrame(
+        [(3, 1704074400, 30.0, "c")],
+        "event_id long, ts_s long, value double, tag string",
+    ).withColumn("ts", F.timestamp_seconds("ts_s")).drop("ts_s")
+    upd = upd.withColumn("event_date", F.to_date("ts"))
+    merge_upsert(spark, path, upd, ["event_id"])
+    rows = {
+        r["event_id"]: (r["value"], r["tag"])
+        for r in spark.read.option("mergeSchema", "true").parquet(path).collect()
+    }
+    assert rows == {1: (1.0, "a"), 2: (2.0, "b"), 3: (30.0, "c")}

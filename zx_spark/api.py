@@ -24,9 +24,10 @@ import datetime as _dt
 
 from pyspark.sql import DataFrame, SparkSession
 
+from zx_spark.compiler import day_range
 from zx_spark.model import Aggregate, Query
 from zx_spark.sqlshim import Passthrough, ZxCompat, parse_zx_sql, zx_sql
-from zx_spark.storage import truncate_events, write_events
+from zx_spark.storage import day_partition, read_store, truncate_events, write_events
 
 
 class ZX:
@@ -54,22 +55,29 @@ class ZX:
 
     def events(self) -> DataFrame:
         if self.events_path is not None:
-            # mergeSchema: sparse inserts append files whose footers carry
+            # merged schema: sparse inserts append files whose footers carry
             # only their own columns; without merging, columns present only
             # in other files would silently vanish from the store view.
-            return self.spark.read.option("mergeSchema", "true").parquet(self.events_path)
+            return read_store(self.spark, self.events_path)
         return self._events_df
 
     def df(self, text: str) -> DataFrame:
         """The composable form: query → DataFrame (lazy)."""
-        return zx_sql(
-            self.spark,
-            text,
-            df=self.events(),
-            granularity_s=self.granularity_s,
-            compat=self.compat,
-            **self._cols,
+        return self._compile(
+            parse_zx_sql(text, granularity_s=self.granularity_s, compat=self.compat)
         )
+
+    def _compile(self, parsed: Query | Passthrough) -> DataFrame:
+        """A parsed query → DataFrame. On a store partitioned by day the
+        scan reads only the days the query's time range can touch."""
+        df = None
+        if isinstance(parsed, Query):
+            df = self.events()
+            day = day_partition(self.events_path) if self.events_path else None
+            days = day_range(parsed, day) if day else None
+            if days is not None:
+                df = df.filter(days)
+        return zx_sql(self.spark, parsed, df=df, **self._cols)
 
     def sql(self, text: str):
         """The ``ZX.SQL`` analog: query → collected result.
@@ -78,7 +86,7 @@ class ZX:
         anything else (raw projection, passthrough, ORDER BY path) → list
         of row dicts."""
         parsed = parse_zx_sql(text, granularity_s=self.granularity_s, compat=self.compat)
-        out = self.df(text)
+        out = self._compile(parsed)
         if (
             isinstance(parsed, Query)
             and parsed.group_mode is None  # multidim frames have no window_start
@@ -108,7 +116,7 @@ class ZX:
 
         existing_ids = 0
         try:
-            store = self.spark.read.option("mergeSchema", "true").parquet(self.events_path)
+            store = read_store(self.spark, self.events_path)
             existing_ids = (
                 store.selectExpr(f"max(`{self._cols['id_col']}`) m").collect()[0]["m"] or 0
             )

@@ -10,29 +10,41 @@ Here each stage is the obvious Catalyst construct, so the reference's four
 hand-coded optimizations (SURVEY §4: time pruning, predicate pushdown, column
 pruning, late materialization) come from the optimizer:
 
-- time range   → ``ts BETWEEN`` on a native timestamp column → Parquet
-  row-group min/max stat pruning + partition pruning when partitioned by time
-- conditions   → pushed-down predicates
+- time range   → ``ts`` bounds on a native timestamp column → Parquet
+  row-group min/max stat pruning. The ``ts`` bound alone never becomes a
+  partition filter; a store partitioned by day gets ``day_range``'s
+  ``event_date`` bounds too (the facade adds them, ``api.ZX``)
+- conditions   → pushed-down predicates, one ``filter`` with the time range
 - projection   → ColumnPruning prunes the Parquet ReadSchema
-- group/window → hash aggregate with map-side partial aggregation
+- group/window → hash aggregate with map-side partial aggregation; group
+  keys and aligned windows are ``groupBy`` expressions
+
+The builders fetch the input schema once per query and build plain-SQL
+expressions as ``F.expr`` strings: each ``Column``-API call costs several
+py4j round trips, a parsed string one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import datetime as _dt
+from functools import reduce
 
-from zx_spark.model import NIL, Query, Select
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from zx_spark.model import NIL, Query
 from zx_spark.operators.aggregates import agg_expr, is_numeric_result
-from zx_spark.operators.filters import apply_conditions
+from zx_spark.operators.filters import condition_to_column
 from zx_spark.operators.windows import (
     WINDOW_END_TS,
     WINDOW_NO,
     WINDOW_START_TS,
-    with_aligned_windows,
+    aligned_window_no,
     with_faithful_windows,
     with_session_windows,
 )
+from zx_spark.util import sql_double
 
 GROUP_PREFIX = "g_"
 WINDOW_START = "window_start"
@@ -43,27 +55,55 @@ def group_alias(col: str) -> str:
     return GROUP_PREFIX + col.replace(".", "_")
 
 
-def _scan(df: DataFrame, q: Query, ts_col: str) -> DataFrame:
-    """Time-range scan S1 (reference get_ids_in_range, src/lib.rs:305-331):
-    inclusive [t_start, t_end] on the event timestamp."""
-    ts = F.col(f"`{ts_col}`")
-    if q.t_start is not None:
-        df = df.filter(ts >= F.timestamp_seconds(F.lit(float(q.t_start))))
-    if q.t_end is not None:
-        df = df.filter(ts <= F.timestamp_seconds(F.lit(float(q.t_end))))
-    return df
+def column_types(df: DataFrame) -> dict[str, T.DataType]:
+    """Column name → type: the one schema fetch a query build makes."""
+    return {f.name: f.dataType for f in df.schema.fields}
 
 
-def _group_keys(df: DataFrame, q: Query) -> tuple[DataFrame, list[str]]:
-    """Materialize group-by keys; missing value → the literal "__nil"
-    (reference src/lib.rs:547-551). Group keys are strings, as in the
-    reference's SparseData model."""
-    keys = []
-    for c in q.group_by:
-        a = group_alias(c)
-        df = df.withColumn(a, F.coalesce(F.col(f"`{c}`").cast("string"), F.lit(NIL)))
-        keys.append(a)
-    return df, keys
+def scan_filter(
+    df: DataFrame, q: Query, ts_col: str, types: dict[str, T.DataType] | None = None
+) -> DataFrame:
+    """Time-range scan S1 (reference get_ids_in_range, src/lib.rs:305-331:
+    inclusive [t_start, t_end] on the event timestamp) and the F1
+    conditions as ONE filter. ``types`` (``column_types(df)``) saves the
+    schema fetch when the caller already holds it."""
+    bounds = [
+        f"`{ts_col}` {op} timestamp_seconds({sql_double(t)})"
+        for t, op in ((q.t_start, ">="), (q.t_end, "<="))
+        if t is not None
+    ]
+    preds = [F.expr(" AND ".join(bounds))] if bounds else []
+    if q.conditions:
+        types = column_types(df) if types is None else types
+        preds += [condition_to_column(c, types.get(c.column)) for c in q.conditions]
+    return df.filter(reduce(lambda a, b: a & b, preds)) if preds else df
+
+
+def day_range(q: Query, day_col: str) -> Column | None:
+    """Partition bounds for ``q``'s time range on a store partitioned by
+    day (``storage.write_events`` writes ``day_col = to_date(ts)`` in the
+    session time zone of the write). Each bound is the UTC date of the
+    ``ts`` bound widened by one day, so a store written under any time
+    zone loses no row; ``scan_filter``'s ``ts`` bounds keep the answer
+    exact. None when ``q`` has no time bound a date can hold."""
+    bounds = []
+    for t, op, widen in ((q.t_start, ">=", -1), (q.t_end, "<=", 1)):
+        if t is None:
+            continue
+        try:
+            day = _dt.datetime.fromtimestamp(t, tz=_dt.timezone.utc).date()
+            day += _dt.timedelta(days=widen)
+        except (OverflowError, ValueError, OSError):  # beyond any date
+            continue
+        bounds.append(f"`{day_col}` {op} DATE'{day.isoformat()}'")
+    return F.expr(" AND ".join(bounds)) if bounds else None
+
+
+def _key_expr(col: str) -> Column:
+    """Group-by key as a string, missing value → the literal "__nil"
+    (reference src/lib.rs:547-551), named ``group_alias(col)``. Group keys
+    are strings, as in the reference's SparseData model."""
+    return F.expr(f"coalesce(cast(`{col}` as string), '{NIL}') AS `{group_alias(col)}`")
 
 
 def compile_query(
@@ -83,22 +123,24 @@ def compile_query(
     window, reference src/lib.rs:702-708), then one column per select aliased
     ``<agg>__<col>``.
     """
-    if rate_col is not None and rate_col not in df.columns:
+    types = column_types(df)
+    if rate_col is not None and rate_col not in types:
         rate_col = None
-    df = _scan(df, q, ts_col)
-    df = apply_conditions(df, q.conditions)
-    df, keys = _group_keys(df, q)
+    df = scan_filter(df, q, ts_col, types)
+    keys = [group_alias(c) for c in q.group_by]
 
-    grouping = list(keys)
+    grouping: list = [_key_expr(c) for c in q.group_by]
     faithful = False
     if q.granularity_s is not None:
-        if q.window_mode == "faithful":
-            df = with_faithful_windows(df, keys, id_col, ts_col, q.granularity_s)
-            faithful = True
-        elif q.window_mode == "session":
-            df = with_session_windows(df, keys, id_col, ts_col, q.granularity_s)
-        elif q.window_mode == "aligned":
-            df = with_aligned_windows(df, ts_col, q.granularity_s)
+        if q.window_mode == "aligned":
+            grouping.append(aligned_window_no(ts_col, q.granularity_s))
+        elif q.window_mode in ("faithful", "session"):
+            # the segmenters order rows within each group: keys as columns
+            df = df.withColumns({k: e for k, e in zip(keys, grouping)})
+            faithful = q.window_mode == "faithful"
+            segment = with_faithful_windows if faithful else with_session_windows
+            df = segment(df, keys, id_col, ts_col, q.granularity_s)
+            grouping = keys + [WINDOW_NO]
         else:
             # A typo'd mode must not silently fall back to different
             # window semantics.
@@ -106,9 +148,7 @@ def compile_query(
                 f"unknown window_mode {q.window_mode!r} "
                 "(expected 'aligned', 'session', or 'faithful')"
             )
-        grouping.append(WINDOW_NO)
 
-    ts_unix = F.col(f"`{ts_col}`").cast("double")
     if faithful:
         # Reference-exact report timestamps (src/lib.rs:702-712): first-row-
         # in-id-order ts (a dropped breaking row's ts after a break) and
@@ -116,19 +156,15 @@ def compile_query(
         start_expr = F.first(F.col(WINDOW_START_TS)).alias(WINDOW_START)
         end_expr = F.first(F.col(WINDOW_END_TS)).alias(WINDOW_END)
     else:
-        start_expr = F.min(ts_unix).alias(WINDOW_START)
-        end_expr = F.max(ts_unix).alias(WINDOW_END)
+        start_expr = F.expr(f"min(cast(`{ts_col}` as double)) AS {WINDOW_START}")
+        end_expr = F.expr(f"max(cast(`{ts_col}` as double)) AS {WINDOW_END}")
     aggs = [start_expr, end_expr] + [
         agg_expr(s, rate_col=rate_col, empty_sentinels=empty_sentinels) for s in q.selects
     ]
 
-    if grouping:
-        out = df.groupBy(*grouping).agg(*aggs)
-    else:
-        out = df.agg(*aggs)
-    for helper in (WINDOW_NO, WINDOW_START_TS, WINDOW_END_TS):
-        if helper in out.columns:
-            out = out.drop(helper)
+    out = df.groupBy(*grouping).agg(*aggs) if grouping else df.agg(*aggs)
+    if q.granularity_s is not None:
+        out = out.drop(WINDOW_NO)
     out = apply_having(out, q)
     if sort:
         # Opt-in: a global range sort of the result is an extra exchange —
@@ -147,14 +183,7 @@ def run_query(
     return compile_query(df, q, **kwargs)
 
 
-_HAVING_OPS = {
-    "=": lambda c, v: c == v,
-    "!=": lambda c, v: c != v,
-    "<": lambda c, v: c < v,
-    "<=": lambda c, v: c <= v,
-    ">": lambda c, v: c > v,
-    ">=": lambda c, v: c >= v,
-}
+_HAVING_OPS = {"=", "!=", "<", "<=", ">", ">="}
 
 
 def apply_having(out: DataFrame, q: Query) -> DataFrame:
@@ -167,13 +196,16 @@ def apply_having(out: DataFrame, q: Query) -> DataFrame:
     if not q.having:
         return out
     aliases = {s.alias for s in q.selects}
+    preds = []
     for alias, op, val in q.having:
         if alias not in aliases:
             raise ValueError(
                 f"HAVING references {alias!r}, which is not in the SELECT list"
             )
-        out = out.filter(_HAVING_OPS[op](F.col(f"`{alias}`"), F.lit(val)))
-    return out
+        if op not in _HAVING_OPS:
+            raise ValueError(f"unknown HAVING operator {op!r}")
+        preds.append(f"`{alias}` {op} {sql_double(val)}")
+    return out.filter(" AND ".join(preds))
 
 
 def run_sorted(
@@ -192,11 +224,11 @@ def run_sorted(
     reference parses ORDER BY but never wires it to SQL (src/lib.rs:840) —
     here it works, and generalizes to Spark's orderBy at any scale.
     """
-    if rate_col is not None and rate_col not in df.columns:
+    types = column_types(df)
+    if rate_col is not None and rate_col not in types:
         rate_col = None
-    work = _scan(df, q, ts_col)
-    work = apply_conditions(work, q.conditions)
-    work, keys = _group_keys(work, q)
+    work = scan_filter(df, q, ts_col, types)
+    keys = [_key_expr(c) for c in q.group_by]
 
     numeric = [s for s in q.selects if is_numeric_result(s)]
     aggs = [agg_expr(s, rate_col=rate_col) for s in numeric]
@@ -224,6 +256,3 @@ def run_sorted(
         out = out.orderBy(*order)
     return out
 
-
-def select_aliases(q: Query) -> list[tuple[Select, str]]:
-    return [(s, s.alias) for s in q.selects]

@@ -30,6 +30,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from zx_spark.model import Aggregate, Select
+from zx_spark.util import sql_double
 
 F64_MIN = -1.7976931348623157e308
 F64_MAX = 1.7976931348623157e308
@@ -41,9 +42,13 @@ HEATMAP_BINS = 10
 
 
 def _rate(rate_col: str | None) -> Column:
+    return F.expr(_rate_sql(rate_col))
+
+
+def _rate_sql(rate_col: str | None) -> str:
     if rate_col is None:
-        return F.lit(1.0)
-    return F.coalesce(F.col(f"`{rate_col}`").cast("double"), F.lit(1.0))
+        return "1.0D"
+    return f"coalesce(cast(`{rate_col}` as double), 1.0D)"
 
 
 def agg_expr(
@@ -51,54 +56,53 @@ def agg_expr(
     rate_col: str | None = "sample_rate",
     empty_sentinels: bool = True,
 ) -> Column:
-    """Build the aggregate Column for one Select; aliased to ``sel.alias``."""
-    col = F.col(f"`{sel.column}`")
-    x = col.cast("double")
-    r = _rate(rate_col)
+    """Build the aggregate Column for one Select; aliased to ``sel.alias``.
+
+    Built as ONE SQL expression: a query build then pays one py4j call per
+    aggregate, where the Column API pays several per function (each also
+    records its Python call site in the JVM)."""
+    return F.expr(f"{_agg_sql(sel, rate_col, empty_sentinels)} AS `{sel.alias}`")
+
+
+def _agg_sql(sel: Select, rate_col: str | None, empty_sentinels: bool) -> str:
+    col = f"`{sel.column}`"
+    x = f"cast({col} as double)"
+    r = _rate_sql(rate_col)
     a = sel.aggregate
 
     if a is Aggregate.SUM:
-        expr = F.sum(F.coalesce(x, F.lit(0.0)) * r)
-        expr = F.coalesce(expr, F.lit(0.0))
-    elif a is Aggregate.MAX:
-        expr = F.max(x)
-        if empty_sentinels:
-            expr = F.coalesce(expr, F.lit(F64_MIN))
-    elif a is Aggregate.MIN:
-        expr = F.min(x)
-        if empty_sentinels:
-            expr = F.coalesce(expr, F.lit(F64_MAX))
-    elif a is Aggregate.COUNT:
-        expr = F.sum(F.when(col.isNotNull(), r).otherwise(F.lit(0.0)))
-        expr = F.coalesce(expr, F.lit(0.0))
-    elif a is Aggregate.COUNT_DISTINCT:
-        expr = (
-            F.countDistinct(col)
-            + F.max(F.when(col.isNull(), F.lit(1)).otherwise(F.lit(0)))
-        ).cast("double")
-    elif a is Aggregate.COUNT_DISTINCT_APPROX:
+        return f"coalesce(sum(coalesce({x}, 0.0D) * {r}), 0.0D)"
+    if a is Aggregate.MAX:
+        e = f"max({x})"
+        return f"coalesce({e}, {sql_double(F64_MIN)})" if empty_sentinels else e
+    if a is Aggregate.MIN:
+        e = f"min({x})"
+        return f"coalesce({e}, {sql_double(F64_MAX)})" if empty_sentinels else e
+    if a is Aggregate.COUNT:
+        return f"coalesce(sum(CASE WHEN {col} IS NOT NULL THEN {r} ELSE 0.0D END), 0.0D)"
+    null_as_one = f"max(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END)"
+    if a is Aggregate.COUNT_DISTINCT:
+        return f"cast(count(DISTINCT {col}) + {null_as_one} as double)"
+    if a is Aggregate.COUNT_DISTINCT_APPROX:
         # HLL++ sketch (rsd from params, default 5%): mergeable partial
         # aggregate, no exact-distinct shuffle — the 100 TB variant. Keeps
         # the reference's NULL-counts-as-one-distinct rule.
         rsd = float(sel.params[0]) if sel.params else 0.05
-        expr = (
-            F.approx_count_distinct(col, rsd)
-            + F.max(F.when(col.isNull(), F.lit(1)).otherwise(F.lit(0)))
-        ).cast("double")
-    elif a is Aggregate.MEAN:
+        return f"cast(approx_count_distinct({col}, {sql_double(rsd)}) + {null_as_one} as double)"
+    if a is Aggregate.MEAN:
         # Reference parses the rate as isize for mean (src/lib.rs:643-646):
         # integer-truncate before weighting.
-        ri = F.floor(r).cast("double")
-        num = F.sum(F.when(x.isNotNull(), x * ri))
-        den = F.sum(F.when(x.isNotNull(), ri))
-        expr = num / den
-    elif a is Aggregate.P50:
-        expr = F.expr(f"percentile(cast(`{sel.column}` as double), 0.5)")
-    elif a is Aggregate.P50_APPROX:
+        ri = f"cast(floor({r}) as double)"
+        num = f"sum(CASE WHEN {x} IS NOT NULL THEN {x} * {ri} END)"
+        den = f"sum(CASE WHEN {x} IS NOT NULL THEN {ri} END)"
+        return f"{num} / {den}"
+    if a is Aggregate.P50:
+        return f"percentile({x}, 0.5)"
+    if a is Aggregate.P50_APPROX:
         # Mergeable sketch — the 100 TB path (exact percentile buffers
         # every value per group; the sketch is bounded-memory).
-        expr = approx_quantiles(sel.column, [0.5])[0]
-    elif a is Aggregate.QUANTILE_APPROX:
+        return _approx_quantile_sql(x, 0.5)
+    if a is Aggregate.QUANTILE_APPROX:
         if not sel.params or not 0.0 < float(sel.params[0]) < 1.0:
             raise ValueError(
                 f"QUANTILE_APPROX needs params=(q, ...) with 0 < q < 1, "
@@ -112,41 +116,34 @@ def agg_expr(
                 "QUANTILE_APPROX with q=0.5 duplicates P50_APPROX's "
                 "alias — use Aggregate.P50_APPROX instead"
             )
-        expr = approx_quantiles(sel.column, [float(sel.params[0])])[0]
-    elif a is Aggregate.RAW:
-        expr = F.sort_array(F.collect_list(x))
-    elif a is Aggregate.HEATMAP:
+        return _approx_quantile_sql(x, float(sel.params[0]))
+    if a is Aggregate.RAW:
+        return f"sort_array(collect_list({x}))"
+    if a is Aggregate.HEATMAP:
         lo, hi, bins = sel.params or (HEATMAP_LO, HEATMAP_HI, HEATMAP_BINS)
         if not (hi > lo and bins > 0):
             raise ValueError(f"bad heatmap domain ({lo}, {hi}, {bins})")
-        expr = histogram(x, float(lo), float(hi), int(bins))
-    else:
-        raise ValueError(f"unknown aggregate {a}")
-    return expr.alias(sel.alias)
+        return _histogram_sql(x, float(lo), float(hi), int(bins))
+    raise ValueError(f"unknown aggregate {a}")
 
 
-def histogram(x: Column, lo: float, hi: float, bins: int) -> Column:
-    """Deterministic equi-width histogram as an array of counts.
+def _histogram_sql(x: str, lo: float, hi: float, bins: int) -> str:
+    """Deterministic equi-width histogram of ``x`` as an array of counts.
 
-    One F.sum per bin — each is a plain partial-aggregatable expression, so
+    One sum per bin — each is a plain partial-aggregatable expression, so
     this scales (unlike collect_list-then-bucket). Values outside [lo, hi)
     clamp into the edge bins. The reference's HEATMAP never ran
     (src/lib.rs:661); its intended output type was ``AggregateResult::List``
     (src/lib.rs:41), which this matches.
     """
     width = (hi - lo) / bins
-    bucket = F.least(
-        F.greatest(F.floor((x - F.lit(lo)) / F.lit(width)), F.lit(0)),
-        F.lit(bins - 1),
+    bucket = f"least(greatest(floor(({x} - {sql_double(lo)}) / {sql_double(width)}), 0), {bins - 1})"
+    counts = ", ".join(
+        f"cast(coalesce(sum(CASE WHEN {x} IS NOT NULL AND {bucket} = {i} "
+        "THEN 1 ELSE 0 END), 0) as double)"
+        for i in range(bins)
     )
-    return F.array(
-        *[
-            F.coalesce(
-                F.sum(F.when(x.isNotNull() & (bucket == i), 1).otherwise(0)), F.lit(0)
-            ).cast("double")
-            for i in range(bins)
-        ]
-    )
+    return f"array({counts})"
 
 
 def is_numeric_result(sel: Select) -> bool:
@@ -154,10 +151,7 @@ def is_numeric_result(sel: Select) -> bool:
     return sel.aggregate not in (Aggregate.RAW, Aggregate.HEATMAP)
 
 
-def approx_quantiles(column: str, probabilities: list[float], accuracy: int = 10000) -> Column:
-    """Mergeable quantile sketch (percentile_approx) — the scale variant of
-    exact P50 for 100 TB inputs."""
-    probs = ", ".join(str(p) for p in probabilities)
-    return F.expr(
-        f"percentile_approx(cast(`{column}` as double), array({probs}), {accuracy})"
-    )
+def _approx_quantile_sql(x: str, q: float) -> str:
+    """Mergeable quantile sketch (percentile_approx) — the scale variant
+    of exact P50 for 100 TB inputs."""
+    return f"percentile_approx({x}, array({q}), 10000)[0]"

@@ -319,6 +319,16 @@ def _source_overlap_bitmask(
     code = F.when(src == F.lit(sources[0]), F.lit(0))
     for i, s in enumerate(sources[1:], start=1):
         code = code.when(src == F.lit(s), F.lit(i))
+    # a NULL source stays a NULL bit (bit_or skips it); a non-NULL source
+    # the dictionary lacks would silently drop out of every pair: raise
+    code = code.otherwise(
+        F.when(
+            src.isNotNull(),
+            F.raise_error(
+                F.concat(F.lit("source missing from the overlap dictionary: "), src)
+            ),
+        )
+    )
     hashed = _with_shingle_hashes(
         _spread(filtered), text_col, n, "__hs"
     ).select(

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from zx_spark.functions.text import shingles_from_tokens, tokenize, word_shingles
+from zx_spark.functions.text import shingles_from_tokens, tokenize
 
 
 from zx_spark.util import lit_array
@@ -96,25 +96,6 @@ def base_hash(s: Column, method: str = "md5") -> Column:
         raise ValueError(f"base_hash method must be 'md5' or 'xx64', got {method!r}")
     return F.pmod(
         F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"), F.lit(_MERSENNE)
-    )
-
-
-def minhash_signature(
-    text: Column, num_hashes: int = 32, shingle_n: int = 3, hash_method: str = "md5"
-) -> Column:
-    """Array of ``num_hashes`` minhashes over n-word shingles — one
-    ``F.aggregate`` pass, JVM-side, no Python.
-
-    Each shingle is string-hashed ONCE (``base_hash``), then the
-    ``num_hashes`` family members are cheap affine maps ``(a_i*h + b_i)
-    mod 2^31-1`` (pairwise-independent universal hashing). The previous
-    formulation string-hashed per (shingle, seed) — num_hashes O(len)
-    string hashes per shingle vs one here; measured ~2× faster end-to-end
-    at 5k docs. Products stay < 2^62, so no overflow under ANSI mode. The
-    naive per-seed formulation (num_hashes separate ``array_min`` passes)
-    re-builds the shingle array once per seed — measured ~6× slower."""
-    return minhash_from_shingles(
-        word_shingles(text, shingle_n), num_hashes, hash_method
     )
 
 
@@ -468,7 +449,7 @@ def _simhash_token_hash(t: Column, method: str = "md5") -> Column:
 def _simhash_bit_counts(text: Column, hash_method: str = "md5") -> Column:
     """60-element ±1 per-bit accumulation over token hashes — pure
     Catalyst (the same one-``F.aggregate``-pass pattern as
-    ``minhash_signature``). For each whitespace token: hash it JVM-side,
+    ``minhash_from_shingles``). For each whitespace token: hash it JVM-side,
     then add +1/-1 to each bit position depending on the hash bit. No
     Python anywhere (an earlier revision looped per byte in a pandas UDF
     — orders of magnitude slower at scale)."""

@@ -20,6 +20,8 @@ floats don't panic here).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,9 +37,10 @@ def _numeric(col: Column, dtype) -> Column:
     return col
 
 
-def condition_to_column(df: DataFrame, cond: Condition) -> Column:
-    """Lower one Condition to a boolean Column against ``df``."""
-    dtype = dict((f.name, f.dataType) for f in df.schema.fields).get(cond.column)
+def condition_to_column(cond: Condition, dtype: T.DataType | None) -> Column:
+    """Lower one Condition to a boolean Column; ``dtype`` is the type of
+    ``cond.column`` in the filtered frame (None when it has no such
+    column)."""
     col = F.col(f"`{cond.column}`")
     v = cond.value
     if cond.cmp in _NUMERIC_CMPS:
@@ -90,8 +93,10 @@ def _eq_operand(col: Column, dtype, v) -> Column:
 
 def apply_conditions(df: DataFrame, conds: list[Condition]) -> DataFrame:
     """AND all conditions (reference: successive set intersections,
-    src/lib.rs:197-200). Chained .filter() lets Catalyst merge and push
-    them down to the scan."""
-    for cond in conds:
-        df = df.filter(condition_to_column(df, cond))
-    return df
+    src/lib.rs:197-200) in one filter, which Catalyst pushes down to the
+    scan."""
+    if not conds:
+        return df
+    types = {f.name: f.dataType for f in df.schema.fields}
+    preds = [condition_to_column(c, types.get(c.column)) for c in conds]
+    return df.filter(reduce(lambda a, b: a & b, preds))

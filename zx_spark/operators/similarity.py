@@ -698,14 +698,6 @@ def _ivf_topk_batch_arrow(
 # --------------------------------------------------------------------------
 
 
-def _sqdist_lit(v: Column, center: list[float]) -> Column:
-    """Squared L2 distance to a literal center via the expansion
-    |v|^2 - 2*v.c + |c|^2 (the same formula the DuckDB oracle uses)."""
-    c = lit_array([float(x) for x in center])
-    c2 = float(sum(x * x for x in center))
-    return _dot(v, v) - 2.0 * _dot(v, c) + F.lit(c2)
-
-
 def ivf_init_centers(
     df: DataFrame, vec_col: str, id_col: str, n_cells: int
 ) -> list[list[float]]:

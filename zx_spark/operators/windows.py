@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -159,13 +159,20 @@ def _fresh_names(taken, *bases: str) -> list[str]:
     return out
 
 
-def with_aligned_windows(df: DataFrame, ts_col: str, granularity_s: float) -> DataFrame:
-    """Epoch-aligned tumbling window id (bucket start, unix seconds)."""
+def aligned_window_no(ts_col: str, granularity_s: float) -> Column:
+    """Epoch-aligned tumbling window id (bucket start, unix seconds),
+    named ``WINDOW_NO`` — one expression, usable in ``groupBy``."""
     ms = int(round(granularity_s * 1000))
     if ms <= 0:
         raise ValueError(f"granularity must be positive, got {granularity_s}s")
-    w = F.window(F.col(ts_col), f"{ms} milliseconds")
-    return df.withColumn(WINDOW_NO, w.start.cast("double"))
+    return F.expr(
+        f"cast(window(`{ts_col}`, '{ms} milliseconds').start as double) AS {WINDOW_NO}"
+    )
+
+
+def with_aligned_windows(df: DataFrame, ts_col: str, granularity_s: float) -> DataFrame:
+    """``df`` plus its ``aligned_window_no`` column."""
+    return df.withColumn(WINDOW_NO, aligned_window_no(ts_col, granularity_s))
 
 
 def with_session_windows(

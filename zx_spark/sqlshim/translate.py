@@ -15,9 +15,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from zx_spark.compiler import compile_query, run_sorted
+from zx_spark.compiler import compile_query, run_sorted, scan_filter
 from zx_spark.model import Aggregate, Cmp, Condition, Query, Select
-from zx_spark.operators.filters import apply_conditions
 
 # Function-name table (reference src/expr.rs:129-139).
 _FUNCS = {
@@ -177,15 +176,21 @@ def _parse_duration(text: str) -> float:
 
 def zx_sql(
     spark: SparkSession,
-    text: str,
+    text: str | Query | Passthrough,
     df: DataFrame | None = None,
     granularity_s: float | None = 300.0,
     compat: ZxCompat = ZxCompat(),
     **compile_kwargs,
 ) -> DataFrame:
     """Execute a query: zx dialect against ``df`` (the one event store), or
-    any FROM-query verbatim through ``spark.sql`` (full Spark SQL surface)."""
-    q = parse_zx_sql(text, granularity_s=granularity_s, compat=compat)
+    any FROM-query verbatim through ``spark.sql`` (full Spark SQL surface).
+    ``text`` may already be parsed (``parse_zx_sql``'s result); then
+    ``granularity_s`` and ``compat`` are not read."""
+    q = (
+        text
+        if isinstance(text, (Query, Passthrough))
+        else parse_zx_sql(text, granularity_s=granularity_s, compat=compat)
+    )
     if isinstance(q, Passthrough):
         return spark.sql(q.sql)
     if df is None:
@@ -194,7 +199,7 @@ def zx_sql(
         # CUBE / ROLLUP / GROUPING SETS → the one-Expand multidim plan.
         # Same scan/filter path as compiled queries; time windows and
         # ORDER BY don't compose with grouping sets in the dialect.
-        from zx_spark.compiler import _scan
+        from zx_spark.compiler import column_types
         from zx_spark.model import Aggregate as _Agg
         from zx_spark.operators.olap import multidim_agg
 
@@ -207,10 +212,10 @@ def zx_sql(
             raise ZxSqlError("GRANULARITY is not supported with CUBE/ROLLUP")
         if any(s.aggregate is _Agg.RAW for s in q.selects):
             raise ZxSqlError("bare columns are not valid with CUBE/ROLLUP")
-        work = _scan(df, q, compile_kwargs.get("ts_col", "ts"))
-        work = apply_conditions(work, q.conditions)
+        types = column_types(df)
+        work = scan_filter(df, q, compile_kwargs.get("ts_col", "ts"), types)
         rate_col = compile_kwargs.get("rate_col", "sample_rate")
-        if rate_col is not None and rate_col not in df.columns:
+        if rate_col is not None and rate_col not in types:
             # same guard compile_query/run_sorted apply (compiler.py)
             rate_col = None
         from zx_spark.compiler import apply_having
@@ -235,12 +240,8 @@ def zx_sql(
     if all(s.aggregate is Aggregate.RAW for s in q.selects) and not q.group_by:
         # Plain projection: scan → filter → select, fully distributed (the
         # reference's Raw arm is unimplemented!(), src/lib.rs:660).
-        work = df
-        if q.t_start is not None or q.t_end is not None or q.conditions:
-            from zx_spark.compiler import _scan  # same scan path as compiled queries
-
-            work = _scan(work, q, compile_kwargs.get("ts_col", "ts"))
-            work = apply_conditions(work, q.conditions)
+        # same scan path as compiled queries
+        work = scan_filter(df, q, compile_kwargs.get("ts_col", "ts"))
         return work.select(*[f"`{s.column}`" for s in q.selects])
     return compile_query(df, q, **compile_kwargs)
 

@@ -8,9 +8,12 @@ beyond conventions:
 - events schema: ``id BIGINT, ts TIMESTAMP, sample_rate DOUBLE,
   <attr> STRING...`` — nullable attr columns encode sparsity (NULL = the
   reference's "column absent for this row").
-- at scale, write partitioned by time (``partitionBy(date(ts))``) so the
-  reference's TS-index range scan (src/lib.rs:305-331) becomes partition
-  pruning + row-group stat pruning.
+- at scale, write partitioned by day (``write_events``: ``event_date =
+  to_date(ts)``) so the reference's TS-index range scan
+  (src/lib.rs:305-331) becomes partition pruning (``compiler.day_range``)
+  + row-group stat pruning.
+- read a store with ``read_store``: the merged schema of every file, kept
+  per store so a read whose files add no column skips the merge job.
 
 ``zx_fixture`` materializes the reference's only dataset — the 10-row
 fixture from fixtures/test.cmd:1-66 (schema + rows pinned in FIXTURES.md) —
@@ -18,6 +21,11 @@ for the golden-value tests ported from src/test.rs.
 """
 
 from __future__ import annotations
+
+import os
+import re
+from dataclasses import dataclass, replace
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -132,6 +140,132 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
         for f in schema
         if pat.is_timestamp(f.type) and f.type.unit == "ns"
     ]
+
+
+# ------------------------------------------------------- store reads
+#
+# Sparse inserts append files whose footers carry only their own columns,
+# so a store's schema is the merge of every file's footer. Spark's
+# mergeSchema read runs that merge as a Spark job on every read;
+# read_store keeps the merged schema per store and reruns the merge only
+# when the files' column union or the partition layout changes.
+
+# The day partition write_events adds; compiler.day_range prunes on it.
+DAY_PARTITION = "event_date"
+# Session confs that change how Spark types a parquet footer.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+@dataclass(frozen=True)
+class _StoreSchema:
+    # data file -> (size, mtime_ns, footer columns as {(name, type)})
+    footers: dict[str, tuple[int, int, frozenset]]
+    # (schema confs, union of footer columns, partition layout)
+    key: tuple
+    partition_cols: frozenset
+    schema: T.StructType | None = None
+
+
+# local store directory -> its schema as of the last read_store
+_STORE_SCHEMAS: dict[str, _StoreSchema] = {}
+
+
+def read_store(spark: SparkSession, path: str) -> DataFrame:
+    """The store at ``path`` with the merged schema of all its files — the
+    frame ``spark.read.option("mergeSchema", "true").parquet(path)`` gives.
+
+    For a local store the merged schema is kept, together with each data
+    file's footer columns keyed on (file, size, mtime). While the union of
+    footer columns and the partition layout are unchanged, the read passes
+    the kept schema and skips Spark's footer-merge job; a column that is
+    new, changes type or vanishes reruns the merge. Only footers of files
+    not seen before are opened. Non-local paths, missing or empty stores
+    and unreadable footers take the plain ``mergeSchema`` read."""
+    local = _local_store_dir(path)
+    prev = _STORE_SCHEMAS.pop(local, None) if local is not None else None
+    listing = _list_store(spark, local, prev) if local is not None else None
+    if listing is not None and prev is not None and prev.key == listing.key:
+        _STORE_SCHEMAS[local] = replace(listing, schema=prev.schema)
+        return spark.read.schema(prev.schema).parquet(path)
+    df = spark.read.option("mergeSchema", "true").parquet(path)
+    if listing is not None:
+        _STORE_SCHEMAS[local] = replace(listing, schema=df.schema)
+    return df
+
+
+def day_partition(path: str) -> str | None:
+    """``DAY_PARTITION`` when the last ``read_store`` of ``path`` found
+    the store partitioned by a DateType ``event_date`` directory level
+    (the ``write_events`` layout); None otherwise, and for non-local
+    stores."""
+    local = _local_store_dir(path)
+    entry = _STORE_SCHEMAS.get(local) if local is not None else None
+    if entry is None or DAY_PARTITION not in entry.partition_cols:
+        return None
+    field = next((f for f in entry.schema.fields if f.name == DAY_PARTITION), None)
+    return DAY_PARTITION if field is not None and isinstance(field.dataType, T.DateType) else None
+
+
+def _local_store_dir(path: str) -> str | None:
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    local = os.path.abspath(parsed.path if parsed.scheme else path)
+    return local if os.path.isdir(local) else None
+
+
+def _list_store(
+    spark: SparkSession, local: str, prev: _StoreSchema | None
+) -> _StoreSchema | None:
+    """The store's data files, footer columns and partition layout (no
+    schema yet); footers unchanged since ``prev`` are not reopened. None
+    when the store has no data file or a footer cannot be read."""
+    import pyarrow.parquet as pq
+
+    footers: dict[str, tuple[int, int, frozenset]] = {}
+    layout: set[tuple] = set()
+    # the files Spark's listing reads: hidden and "_"-prefixed names skip
+    for root, dirs, files in os.walk(local):
+        dirs[:] = [
+            d for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        ]
+        names = [f for f in files if not f.startswith((".", "_"))]
+        if not names:
+            continue
+        rel = os.path.relpath(root, local)
+        # partition names and value shapes (digits masked): a new day
+        # keeps the layout; a value Spark would type differently changes it
+        layout.add(
+            tuple(
+                (seg.split("=", 1)[0] if "=" in seg else None, re.sub(r"\d", "0", seg))
+                for seg in ([] if rel == "." else rel.split(os.sep))
+            )
+        )
+        for name in names:
+            f = os.path.join(root, name)
+            try:
+                st = os.stat(f)
+                old = prev.footers.get(f) if prev is not None else None
+                if old is not None and old[:2] == (st.st_size, st.st_mtime_ns):
+                    cols = old[2]
+                else:
+                    cols = frozenset((c.name, str(c.type)) for c in pq.read_schema(f))
+            except (OSError, ValueError):  # vanished, or not a parquet file
+                return None
+            footers[f] = (st.st_size, st.st_mtime_ns, cols)
+    if not footers:
+        return None
+    confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+    union = frozenset().union(*(cols for _, _, cols in footers.values()))
+    return _StoreSchema(
+        footers,
+        (confs, union, frozenset(layout)),
+        frozenset(name for segs in layout for name, _ in segs if name is not None),
+    )
 
 
 # (applicationId, catalog table name) pairs already ANALYZEd — stats
@@ -349,7 +483,7 @@ def truncate_events(spark: SparkSession, path: str, schema: T.StructType | None 
     fixture schema only when the store doesn't exist yet (true init)."""
     if schema is None:
         try:
-            schema = spark.read.parquet(path).schema
+            schema = read_store(spark, path).schema
         except Exception:
             schema = ZX_FIXTURE_SCHEMA
     spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
@@ -409,7 +543,7 @@ def compact_store(
 
     if partition_cols is None:
         partition_cols = _discover_partition_cols(path)
-    df = spark.read.parquet(path)
+    df = read_store(spark, path)
     rows = df.count()
     if rows == 0:
         return {"files_before": len(before), "files_after": len(before),
@@ -550,7 +684,7 @@ def cluster_store(
     if not cols:
         raise ValueError("cluster_store needs at least one column")
     _recover_swap(path)
-    df = spark.read.parquet(path)
+    df = read_store(spark, path)
     for c in cols:
         if c not in df.columns:
             raise ValueError(f"cluster column {c!r} not in {df.columns}")
@@ -661,8 +795,8 @@ def write_events(
     ("parquet" or "orc")."""
     writer = df.write.mode("append")
     if partition_by_day:
-        df = df.withColumn("event_date", F.to_date("ts"))
-        writer = df.write.mode("append").partitionBy("event_date")
+        df = df.withColumn(DAY_PARTITION, F.to_date("ts"))
+        writer = df.write.mode("append").partitionBy(DAY_PARTITION)
     writer.format(fmt).save(path)
     invalidate_stats(df.sparkSession, path)
 
@@ -707,7 +841,7 @@ def merge_upsert(
     if partition_cols is None:
         partition_cols = _discover_partition_cols(path)
     _recover_swap(path)
-    store = spark.read.parquet(path)
+    store = read_store(spark, path)
     missing = [c for c in store.columns if c not in updates.columns]
     if missing:
         raise ValueError(f"updates is missing store columns {missing}")
@@ -870,7 +1004,11 @@ def read_snapshot(
         )
     if not files:
         return spark.read.schema("__empty string").parquet(path).limit(0)
-    return spark.read.option("basePath", path).parquet(*files)
+    return (
+        spark.read.option("basePath", path)
+        .option("mergeSchema", "true")
+        .parquet(*files)
+    )
 
 
 def vacuum_snapshots(path: str, keep: int = 2) -> dict:

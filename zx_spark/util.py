@@ -23,6 +23,16 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
+def sql_double(v: float) -> str:
+    """``v`` as Spark SQL text of a DOUBLE that parses back to the same
+    bits: ``repr`` (the shortest round-trip form) with a ``D`` suffix;
+    non-finite values through a string cast."""
+    import math
+
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"cast('{v!r}' as double)"
+
+
 def lit_array(vals):
     """Array literal in ONE driver-side parse.
 
