@@ -130,11 +130,6 @@ ATTESTATIONS: dict[tuple[str, str], tuple[int, str]] = {
         "groups x slices summary, hinted ONLY under the "
         "SESSION_SUMMARY_BROADCAST_MAX estimate check on the line above",
     ),
-    ("zx_spark/storage.py", "compact_store"): (
-        1,
-        "one narrow count row per partition directory of the store "
-        "being compacted (partition-value cardinality, not rows)",
-    ),
 }
 
 

@@ -103,7 +103,12 @@ class ZX:
     def i(self, ts: float | None = None, **columns) -> None:
         """``ZX.I`` analog: insert one sparse row (columns as kwargs).
         Requires a path-backed store. The reference assigns ``Utc::now()``
-        when no ts is given — same default here."""
+        when no ts is given — same default here.
+
+        Cost: the new id is ``max(id) + 1`` over the whole store, a Spark
+        job that scans every row's id on every insert, so an insert grows
+        with the store where the reference's ``ZADD`` does not. Bulk
+        loads belong in ``write_events``."""
         if self.events_path is None:
             raise ValueError("insert needs events_path (read-only DataFrame store)")
         if ts is None:

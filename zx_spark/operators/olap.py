@@ -25,8 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from zx_spark.compiler import group_alias
-from zx_spark.model import NIL, Select
+from zx_spark.compiler import _key_expr, group_alias
+from zx_spark.model import Select
 from zx_spark.operators.aggregates import agg_expr
 
 GROUPING_ID = "grouping_id"
@@ -74,13 +74,10 @@ def multidim_agg(
         raise ValueError("multidim_agg needs at least one dimension")
     if not selects:
         raise ValueError("multidim_agg needs at least one Select")
-    keys = []
-    for c in dims:
-        a = group_alias(c)
-        df = df.withColumn(
-            a, F.coalesce(F.col(f"`{c}`").cast("string"), F.lit(NIL))
-        )
-        keys.append(a)
+    # keys and aggregates as SQL strings: one py4j call each, where the
+    # Column API pays several per function (compiler._key_expr, agg_expr)
+    keys = [group_alias(c) for c in dims]
+    df = df.withColumns(dict(zip(keys, [_key_expr(c) for c in dims])))
 
     if mode == "cube":
         grouped = df.cube(*keys)
@@ -95,15 +92,15 @@ def multidim_agg(
                 raise ValueError(
                     f"grouping set {s!r} names non-dimension columns {bad!r}"
                 )
-            sets.append([F.col(name_to_key[c]) for c in s])
-        grouped = df.groupingSets(sets, *[F.col(k) for k in keys])
+            sets.append([name_to_key[c] for c in s])
+        grouped = df.groupingSets(sets, *keys)
     else:
         raise ValueError(
             f"mode must be 'cube', 'rollup', or a list of grouping sets, "
             f"got {mode!r}"
         )
 
-    aggs = [F.grouping_id().alias(GROUPING_ID)] + [
+    aggs = [F.expr(f"grouping_id() AS {GROUPING_ID}")] + [
         agg_expr(s, rate_col=rate_col, empty_sentinels=empty_sentinels)
         for s in selects
     ]

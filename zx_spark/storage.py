@@ -14,6 +14,9 @@ beyond conventions:
   + row-group stat pruning.
 - read a store with ``read_store``: the merged schema of every file, kept
   per store so a read whose files add no column skips the merge job.
+- maintenance (``compact_store``, ``merge_upsert``) swaps in only the partitions it
+  rewrites, two renames each: a crash leaves every partition before or after, never
+  lost (a crashed merge may leave some partitions merged and others not).
 
 ``zx_fixture`` materializes the reference's only dataset — the 10-row
 fixture from fixtures/test.cmd:1-66 (schema + rows pinned in FIXTURES.md) —
@@ -22,10 +25,16 @@ for the golden-value tests ported from src/test.rs.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
+import math
 import os
 import re
+import shutil
+import time
 from dataclasses import dataclass, replace
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,9 +131,6 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     arrive as bigint under nanosAsLong and need normalization). ``path``
     may be a single file or a Spark-written directory of part files —
     one footer is representative either way."""
-    import glob
-    import os
-
     import pyarrow.parquet as pq
     import pyarrow.types as pat
 
@@ -161,8 +167,8 @@ _SCHEMA_CONFS = (
 
 @dataclass(frozen=True)
 class _StoreSchema:
-    # data file -> (size, mtime_ns, footer columns as {(name, type)})
-    footers: dict[str, tuple[int, int, frozenset]]
+    # data file -> (size, mtime_ns, footer columns as {(name, type)}, rows)
+    footers: dict[str, tuple[int, int, frozenset, int]]
     # (schema confs, union of footer columns, partition layout)
     key: tuple
     partition_cols: frozenset
@@ -178,22 +184,36 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     frame ``spark.read.option("mergeSchema", "true").parquet(path)`` gives.
 
     For a local store the merged schema is kept, together with each data
-    file's footer columns keyed on (file, size, mtime). While the union of
-    footer columns and the partition layout are unchanged, the read passes
-    the kept schema and skips Spark's footer-merge job; a column that is
-    new, changes type or vanishes reruns the merge. Only footers of files
-    not seen before are opened. Non-local paths, missing or empty stores
-    and unreadable footers take the plain ``mergeSchema`` read."""
+    file's footer columns and row count keyed on (file, size, mtime).
+    While the union of footer columns and the partition layout are
+    unchanged, the read passes the kept schema and skips Spark's
+    footer-merge job; a column that is new, changes type or vanishes
+    reruns the merge. Only footers of files not seen before are opened.
+    Non-local paths, missing or empty stores and unreadable footers take
+    the plain ``mergeSchema`` read."""
+    entry = _kept_store(spark, path)
+    if entry is None:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(entry.schema).parquet(path)
+
+
+def _kept_store(spark: SparkSession, path: str) -> _StoreSchema | None:
+    """The kept listing and merged schema of a local store, refreshed from
+    disk (a Spark job only when the schema key changed); None for
+    non-local, missing or empty stores and unreadable footers."""
     local = _local_store_dir(path)
-    prev = _STORE_SCHEMAS.pop(local, None) if local is not None else None
-    listing = _list_store(spark, local, prev) if local is not None else None
-    if listing is not None and prev is not None and prev.key == listing.key:
-        _STORE_SCHEMAS[local] = replace(listing, schema=prev.schema)
-        return spark.read.schema(prev.schema).parquet(path)
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if listing is not None:
-        _STORE_SCHEMAS[local] = replace(listing, schema=df.schema)
-    return df
+    if local is None:
+        return None
+    prev = _STORE_SCHEMAS.pop(local, None)
+    listing = _list_store(spark, local, prev)
+    if listing is None:
+        return None
+    if prev is not None and prev.key == listing.key:
+        schema = prev.schema
+    else:
+        schema = spark.read.option("mergeSchema", "true").parquet(path).schema
+    _STORE_SCHEMAS[local] = replace(listing, schema=schema)
+    return _STORE_SCHEMAS[local]
 
 
 def day_partition(path: str) -> str | None:
@@ -217,6 +237,20 @@ def _local_store_dir(path: str) -> str | None:
     return local if os.path.isdir(local) else None
 
 
+def _walk_data(top: str):
+    """(directory, its path relative to ``top``, data file names) for each
+    directory under ``top`` holding data files — the files Spark's listing
+    reads: hidden and "_"-prefixed names skip."""
+    for root, dirs, files in os.walk(top):
+        dirs[:] = [
+            d for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        ]
+        names = [f for f in files if not f.startswith((".", "_"))]
+        if names:
+            yield root, os.path.relpath(root, top), names
+
+
 def _list_store(
     spark: SparkSession, local: str, prev: _StoreSchema | None
 ) -> _StoreSchema | None:
@@ -225,18 +259,9 @@ def _list_store(
     when the store has no data file or a footer cannot be read."""
     import pyarrow.parquet as pq
 
-    footers: dict[str, tuple[int, int, frozenset]] = {}
+    footers: dict[str, tuple[int, int, frozenset, int]] = {}
     layout: set[tuple] = set()
-    # the files Spark's listing reads: hidden and "_"-prefixed names skip
-    for root, dirs, files in os.walk(local):
-        dirs[:] = [
-            d for d in dirs
-            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
-        ]
-        names = [f for f in files if not f.startswith((".", "_"))]
-        if not names:
-            continue
-        rel = os.path.relpath(root, local)
+    for root, rel, names in _walk_data(local):
         # partition names and value shapes (digits masked): a new day
         # keeps the layout; a value Spark would type differently changes it
         layout.add(
@@ -251,16 +276,17 @@ def _list_store(
                 st = os.stat(f)
                 old = prev.footers.get(f) if prev is not None else None
                 if old is not None and old[:2] == (st.st_size, st.st_mtime_ns):
-                    cols = old[2]
-                else:
-                    cols = frozenset((c.name, str(c.type)) for c in pq.read_schema(f))
+                    footers[f] = old
+                    continue
+                md = pq.read_metadata(f)
             except (OSError, ValueError):  # vanished, or not a parquet file
                 return None
-            footers[f] = (st.st_size, st.st_mtime_ns, cols)
+            cols = frozenset((c.name, str(c.type)) for c in md.schema.to_arrow_schema())
+            footers[f] = (st.st_size, st.st_mtime_ns, cols, md.num_rows)
     if not footers:
         return None
     confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
-    union = frozenset().union(*(cols for _, _, cols in footers.values()))
+    union = frozenset().union(*(e[2] for e in footers.values()))
     return _StoreSchema(
         footers,
         (confs, union, frozenset(layout)),
@@ -274,9 +300,6 @@ _ANALYZED: set[tuple[str, str]] = set()
 
 
 def _stats_digest(path: str) -> str:
-    import hashlib
-    import os
-
     return hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:10]
 
 
@@ -306,13 +329,8 @@ def invalidate_stats(spark: SparkSession, path: str) -> None:
     app = spark.sparkContext.applicationId
     for k in [k for k in _ANALYZED if k[0] == app and k[1].endswith(suffix)]:
         _ANALYZED.discard(k)
-    # refresh by TABLE NAME, matched on the path digest (not
-    # refreshByPath: the catalog stores a file: URI that need not
-    # string-match the raw path, and a missed refresh makes the NEXT
-    # ANALYZE scan the stale listing — measured: re-ANALYZE after an
-    # append kept rowCount=100 on a 10000-row store). Matching by
-    # digest also catches tables whose memo entry is already gone
-    # (second mutation before re-registration).
+    # by digest: also catches tables whose memo entry is already gone
+    # (measured without the refresh: rowCount=100 on a 10000-row store)
     try:
         for t in spark.catalog.listTables():
             if t.name.endswith(suffix):
@@ -336,8 +354,6 @@ def _stats_backed_df(spark: SparkSession, path: str, name: str) -> DataFrame | N
     clauses. At 100 TB the ANALYZE scan is paid once per store version
     (a metastore persists it across sessions; this in-memory catalog
     pays it once per session, memoized here)."""
-    import os
-
     tbl = f"zx_stats_{name}_{_stats_digest(path)}"
     key = (spark.sparkContext.applicationId, tbl)
     try:
@@ -498,148 +514,202 @@ def compact_store(
 ) -> dict:
     """Compact a parquet store's small files into ~``target_file_mb`` files.
 
-    The operational reality behind every streaming/append sink at scale:
-    micro-batch appends (``write_events``, ``foreachBatch``) accrete
+    Micro-batch appends (``write_events``, ``foreachBatch``) accrete
     thousands of KB-sized part files per partition, and scan cost becomes
-    file-open overhead instead of I/O — a 100 TB store with 10 M files is
-    unqueryable regardless of plan quality. Compaction rewrites the data
-    in place at the target file size and preserves the partition layout
-    (so partition pruning keeps working).
+    file-open overhead instead of I/O. Compaction rewrites the fragmented
+    partitions at the target file size and keeps the partition layout (so
+    partition pruning keeps working).
 
-    Plan shape: one count pass sizes each partition, then ONE shuffle
-    keyed on (partition columns, salt) — the salt modulus per partition
-    value is ``ceil(partition_rows / rows_per_target_file)``, so a cold
-    day compacts in one task while a hot 1-TB day fans out across many
-    tasks (one task per output file), never funneling a whole partition
-    through a single executor. ``maxRecordsPerFile`` still caps file
-    size — both knobs are sized from the store's own measured bytes/row,
-    so ``target_file_mb`` is real on-disk MB, not a row guess.
-    Unpartitioned stores repartition to ``ceil(bytes/target)``.
+    Work scales with the partitions touched, not the store: the plan comes
+    from the footers ``read_store`` keeps (bytes and row counts, no Spark
+    job). Only leaf partition directories holding more files than their
+    rows need are read (``basePath`` + the kept schema) and rewritten; a
+    store with nothing to compact runs no Spark job. The rewrite is ONE
+    shuffle keyed on (partition columns, salt), each partition's salt
+    modulus a literal ``ceil(rows / rows_per_target_file)`` — a cold day
+    is one task and one file, a hot 1-TB day fans out over one task per
+    output file. ``maxRecordsPerFile`` caps file size; both are sized from
+    the footers' bytes/row, so ``target_file_mb`` is on-disk MB.
+    Unpartitioned stores repartition to ``ceil(bytes/target)`` and swap
+    the whole directory.
 
-    The rewrite goes to a sibling temp dir, then swaps via two renames —
-    crash-safe for the data (both copies exist until the final rename;
-    an interrupted run is healed on the next call by ``_recover_swap``)
-    but not concurrent-writer-safe: pause appends during the swap (same
-    contract as every non-transactional lake compactor; a table format
-    with optimistic commits is the 100 TB answer for concurrent writers).
+    Crash story (``_rewrite_partitions``): every partition is either
+    before or after the rewrite, never lost; the next call heals an
+    interrupted one. Not concurrent-writer-safe: pause appends (a table
+    format with optimistic commits is the 100 TB answer). Rewritten
+    partitions invalidate snapshots that hold their old files.
 
     Returns ``{files_before, files_after, bytes, rows}``.
     """
-    import glob
-    import math
-    import os
-
     if target_file_mb <= 0:
         raise ValueError(f"target_file_mb must be positive, got {target_file_mb}")
-
-    def _parts(p: str) -> list[str]:
-        return sorted(glob.glob(f"{p}/**/*.parquet", recursive=True))
-
     _recover_swap(path)
-    before = _parts(path)
-    if not before:
+    entry = _kept_store(spark, path)
+    if entry is None:
         raise ValueError(f"no parquet files under {path}")
-    total_bytes = sum(os.path.getsize(f) for f in before)
-
-    if partition_cols is None:
-        partition_cols = _discover_partition_cols(path)
-    df = read_store(spark, path)
-    rows = df.count()
+    target = target_file_mb * 2**20
+    total_bytes = sum(e[0] for e in entry.footers.values())
+    rows = sum(e[3] for e in entry.footers.values())
+    n_files = len(entry.footers)
+    report = {"files_before": n_files, "files_after": n_files, "bytes": total_bytes, "rows": rows}
     if rows == 0:
-        return {"files_before": len(before), "files_after": len(before),
-                "bytes": total_bytes, "rows": 0}
-    max_records = max(1, int(target_file_mb * 2**20 * rows / total_bytes))
+        return report
+    max_records = max(1, int(target * rows / total_bytes))
+    if partition_cols is None:
+        partition_cols = _partition_order(entry, path)
 
-    if partition_cols:
-        # Per-partition salt: spread each partition value over exactly as
-        # many tasks as it needs output files. The per-value row counts
-        # are a tiny aggregate, broadcast back onto the data.
-        counts = (
-            df.groupBy(*partition_cols)
-            .count()
-            .withColumn(
-                "__salt_mod",
-                F.greatest(
-                    F.lit(1), F.ceil(F.col("count") / F.lit(max_records))
-                ).cast("int"),
-            )
-            .drop("count")
-        )
-        hashable = [
-            f.name
-            for f in df.schema.fields
-            if f.name not in partition_cols
-            and not isinstance(f.dataType, T.MapType)
-        ]
-        salt = (
-            F.pmod(F.xxhash64(*[F.col(f"`{c}`") for c in hashable]), F.col("__salt_mod"))
-            if hashable
-            else F.lit(0)
-        )
-        n_tasks = max(
-            spark.sparkContext.defaultParallelism,
-            math.ceil(total_bytes / (target_file_mb * 2**20)),
-        )
-        out = (
-            df.join(F.broadcast(counts), partition_cols)
-            .withColumn("__salt", salt)
-            .repartition(n_tasks, *[F.col(c) for c in partition_cols], F.col("__salt"))
-            .drop("__salt", "__salt_mod")
-        )
-        writer = out.write.partitionBy(*partition_cols)
-    else:
-        out = df.repartition(max(1, math.ceil(total_bytes / (target_file_mb * 2**20))))
-        writer = out.write
-    tmp, _ = _swap_paths(path)
-    writer.mode("overwrite").option("maxRecordsPerFile", max_records).parquet(tmp)
+    if not partition_cols:
+        n_out = max(1, math.ceil(total_bytes / target))
+        if n_files > n_out:
+            tmp, _ = _swap_paths(path)
+            spark.read.schema(entry.schema).parquet(path).repartition(n_out).write.mode(
+                "overwrite"
+            ).option("maxRecordsPerFile", max_records).parquet(tmp)
+            _finish_swap(path)
+            report["files_after"] = sum(len(n) for _, _, n in _walk_data(path))
+            invalidate_stats(spark, path)
+        return report
 
-    _finish_swap(path)
+    local = _local_store_dir(path)
+    leaves: dict[str, list[tuple]] = {}
+    for f, e in entry.footers.items():
+        leaves.setdefault(os.path.relpath(os.path.dirname(f), local), []).append(e)
+    # leaf -> salt modulus, for the leaves holding more files than they need
+    mods = {rel: m for rel, es in leaves.items()
+            if len(es) > (m := max(1, math.ceil(sum(e[3] for e in es) / max_records)))}
+    if not mods:
+        return report
+    df = spark.read.schema(entry.schema).option("basePath", path).parquet(
+        *[os.path.join(path, rel) for rel in sorted(mods)])
+    hashable = [f"`{f.name}`" for f in df.schema.fields
+                if f.name not in partition_cols and not isinstance(f.dataType, T.MapType)]
+    cases = " ".join(f"WHEN {_partition_match(r)} THEN {m}" for r, m in mods.items() if m > 1)
+    salt = f"pmod(xxhash64({', '.join(hashable)}), CASE {cases} ELSE 1 END)"
+    n_tasks = max(spark.sparkContext.defaultParallelism,
+                  math.ceil(sum(e[0] for r in mods for e in leaves[r]) / target))
+    out = (
+        df.withColumn("__salt", F.expr(salt if cases and hashable else "0"))
+        .repartition(n_tasks, *[F.col(f"`{c}`") for c in partition_cols], F.col("__salt"))
+        .drop("__salt")
+    )
+    written = _rewrite_partitions(path, out, partition_cols, set(mods), max_records)
+    report["files_after"] = n_files - sum(len(leaves[r]) for r in mods) + written
     invalidate_stats(spark, path)
-    return {
-        "files_before": len(before),
-        "files_after": len(_parts(path)),
-        "bytes": total_bytes,
-        "rows": rows,
-    }
+    return report
+
+
+# Spark's directory name for a NULL (or empty-string) partition value, and
+# the characters it escapes as %XX in partition directory names.
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+_PATH_ESCAPES = frozenset('"#%\'*/:=?\\\x7f{[]^' + "".join(map(chr, range(1, 32))))
+
+
+def _partition_dir(cols: list[str], values: list[str | None]) -> str:
+    """The directory (relative to the store) Spark writes for a row whose
+    partition columns ``cols`` cast to string give ``values``."""
+
+    def esc(s: str | None) -> str:
+        return "".join(f"%{ord(ch):02X}" if ch in _PATH_ESCAPES else ch for ch in s or "")
+
+    return os.sep.join(f"{esc(c)}={esc(v) or _HIVE_NULL}" for c, v in zip(cols, values))
+
+
+def _partition_match(rel: str) -> str:
+    """A SQL predicate true for the rows of partition directory ``rel``."""
+    conds = []
+    for seg in rel.split(os.sep):
+        c, v = (unquote(x) for x in seg.split("=", 1))
+        lit = v.replace("\\", "\\\\").replace("'", "\\'")
+        conds.append(f"`{c}` IS NULL" if v == _HIVE_NULL else f"cast(`{c}` as string) = '{lit}'")
+    return " AND ".join(conds)
+
+
+def _siblings(path: str, kind: str) -> tuple[str, str]:
+    """(tmp, old) sibling paths of a rewrite: ``kind`` "compact" for the
+    whole-store swap, "rewrite" for a per-partition one, so
+    ``_recover_swap`` tells the two apart."""
+    base = f"{path.rstrip('/')}__{kind}"
+    return base + "_tmp", base + "_old"
+
+
+def _move(src: str, dst: str) -> None:
+    """Rename directory ``src`` to ``dst``, creating its parents; no-op
+    when ``src`` does not exist."""
+    if os.path.isdir(src):
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+
+
+def _rewrite_partitions(
+    path: str, frame: DataFrame, partition_cols: list[str], rels: set[str],
+    max_records: int | None = None,
+) -> int:
+    """Replace the store's partition directories ``rels`` (relative paths,
+    e.g. ``event_date=2024-01-02``) with ``frame`` written partitioned by
+    ``partition_cols``; returns the number of files written.
+
+    ``frame`` goes to a sibling tmp directory first; a directory written
+    outside ``rels`` drops it and raises before any rename. Then each of
+    ``rels`` swaps by two renames (the store's copy to a sibling old
+    directory, the new copy into place); one the write did not produce
+    (every row deleted) is removed. Renaming old onto tmp commits; a crash
+    before leaves each partition either before or after."""
+    tmp, old = _siblings(path, "rewrite")
+    shutil.rmtree(tmp, ignore_errors=True)
+    writer = frame.write.mode("overwrite").partitionBy(*partition_cols)
+    if max_records is not None:
+        writer = writer.option("maxRecordsPerFile", max_records)
+    writer.parquet(tmp)
+    written = {rel: len(names) for _, rel, names in _walk_data(tmp)}
+    stray = sorted(set(written) - rels)
+    if stray:
+        shutil.rmtree(tmp)
+        raise RuntimeError(f"rewrite of {path} wrote partitions it does not replace: {stray}")
+    for rel in sorted(rels):
+        _move(os.path.join(path, rel), os.path.join(old, rel))
+        _move(os.path.join(tmp, rel), os.path.join(path, rel))
+    shutil.rmtree(tmp)
+    if os.path.isdir(old):
+        os.rename(old, tmp)
+        shutil.rmtree(tmp)
+    return sum(written.values())
 
 
 def _swap_paths(path: str) -> tuple[str, str]:
-    """(tmp, old) sibling paths for the compaction two-rename swap; the
+    """(tmp, old) sibling paths for the whole-store two-rename swap; the
     tmp dir is pre-cleaned so a dead prior rewrite can't pollute ours."""
-    import shutil
-
-    tmp = path.rstrip("/") + "__compact_tmp"
-    old = path.rstrip("/") + "__compact_old"
+    tmp, old = _siblings(path, "compact")
     shutil.rmtree(tmp, ignore_errors=True)
     return tmp, old
 
 
 def _recover_swap(path: str) -> None:
-    """Heal an interrupted prior compaction before touching the store.
+    """Heal an interrupted prior rewrite before touching the store.
 
-    Crash points and their remedies: died during the final cleanup →
-    ``path`` is the new data and ``__compact_old`` is removable garbage;
-    died between the two renames → ``path`` is missing and
-    ``__compact_old`` IS the store, so restore it."""
-    import os
-    import shutil
-
-    old = path.rstrip("/") + "__compact_old"
-    if not os.path.exists(old):
-        return
-    if os.path.exists(path):
+    Whole-store swap (``__compact_old``): with ``path`` present it died
+    in the final cleanup and the old copy is garbage; with ``path``
+    missing it died between the renames and the old copy IS the store.
+    Per-partition rewrite (``__rewrite_old``): an old partition the store
+    lacks died between its renames and is restored, the rest are dropped.
+    A tmp directory is never part of the store."""
+    old = _siblings(path, "compact")[1]
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+    tmp, old = _siblings(path, "rewrite")
+    if os.path.isdir(old):
+        for _, rel, _ in list(_walk_data(old)):
+            if not os.path.exists(os.path.join(path, rel)):
+                _move(os.path.join(old, rel), os.path.join(path, rel))
         shutil.rmtree(old)
-    else:
-        os.rename(old, path)
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _finish_swap(path: str) -> None:
     """path -> old, tmp -> path, drop old (call after writing tmp)."""
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "__compact_tmp"
-    old = path.rstrip("/") + "__compact_old"
+    tmp, old = _siblings(path, "compact")
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)
@@ -675,28 +745,26 @@ def cluster_store(
       of doubles); heavy skew inside the grid softens, but never breaks,
       the clustering.
 
-    Same swap/crash-recovery contract as ``compact_store``. Returns
+    Rewrites the whole store through the two-rename whole-store swap
+    (same crash recovery as ``compact_store``'s unpartitioned path),
+    sized from the kept footers' bytes and row counts. Returns
     ``{files, row_groups, rows}`` for the rewritten store.
     """
-    import glob
-    import math
-
     if not cols:
         raise ValueError("cluster_store needs at least one column")
     _recover_swap(path)
-    df = read_store(spark, path)
+    entry = _kept_store(spark, path)
+    if entry is None:
+        raise ValueError(f"no parquet files under {path}")
+    df = spark.read.schema(entry.schema).parquet(path)
     for c in cols:
         if c not in df.columns:
             raise ValueError(f"cluster column {c!r} not in {df.columns}")
-    files = glob.glob(f"{path}/**/*.parquet", recursive=True)
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    import os
-
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    rows = df.count()
+    # sized from the kept footers' bytes and row counts: no count job
+    total_bytes = sum(e[0] for e in entry.footers.values())
+    rows = sum(e[3] for e in entry.footers.values())
     if rows == 0:
-        return {"files": len(files), "row_groups": 0, "rows": 0}
+        return {"files": len(entry.footers), "row_groups": 0, "rows": 0}
     max_records = max(1, int(target_file_mb * 2**20 * rows / total_bytes))
     n_tasks = max(
         spark.sparkContext.defaultParallelism,
@@ -760,30 +828,14 @@ def cluster_store(
     return {"files": len(new_files), "row_groups": rgs, "rows": rows}
 
 
-def _discover_partition_cols(path: str) -> list[str]:
-    """Walk ``key=value`` directory levels to the leaf files — Spark
-    partition layouts nest (day=…/region=…), so one readdir at the root
-    sees only the first level and a rewrite from it would silently
-    flatten the deeper ones."""
-    import os
-
-    cols: list[str] = []
-    p = path
-    while True:
-        subs = [
-            e
-            for e in sorted(os.listdir(p))
-            if "=" in e and os.path.isdir(os.path.join(p, e))
-        ]
-        if not subs:
-            return cols
-        keys = {e.split("=", 1)[0] for e in subs}
-        if len(keys) != 1:
-            raise ValueError(
-                f"inconsistent partition directories under {p}: {sorted(keys)}"
-            )
-        cols.append(keys.pop())
-        p = os.path.join(p, subs[0])
+def _partition_order(entry: _StoreSchema, path: str) -> list[str]:
+    """A store's partition columns, outermost first, from its kept layout
+    — every ``key=value`` level to the leaf files, so a rewrite never
+    flattens nested layouts (day=…/region=…)."""
+    orders = {tuple(name for name, _ in segs) for segs in entry.key[2]}
+    if len(orders) != 1 or None in next(iter(orders)):
+        raise ValueError(f"inconsistent partition directories under {path}: {sorted(map(str, orders))}")
+    return list(orders.pop())
 
 
 def write_events(
@@ -815,107 +867,72 @@ def merge_upsert(
     unmatched updates are inserted, and updates flagged true in
     ``delete_col`` remove their matched rows instead.
 
-    Scale shape — **only touched partitions are rewritten**: the distinct
-    partition values present in ``updates`` (a tiny driver-side list —
-    CDC batches touch few partitions) become literal OR/AND predicates,
-    so the store read is partition-pruned, the merge (one anti-join +
-    union) sees only those partitions' rows, and the write uses dynamic
-    partition overwrite — a 100 TB store pays for the partitions it
-    corrects, never a full rewrite. Unpartitioned stores do a full
-    rewrite through the same crash-safe two-rename swap as
-    ``compact_store`` (and share its concurrency contract: pause other
-    writers; a transactional table format is the answer for concurrent
-    ones).
+    Scale shape — **only touched partitions are rewritten**: one
+    ``groupBy(partition columns)`` summary of ``updates`` gives the touched
+    partitions (a tiny driver-side list) and the upsert and delete counts.
+    Their values become literal predicates, so the store read is
+    partition-pruned and the merge (one anti-join + union) sees only those
+    partitions' rows, which replace exactly the touched directories
+    through ``compact_store``'s per-partition swap; a partition whose
+    every row was deleted is removed. Unpartitioned stores do a full
+    rewrite through the whole-store two-rename swap.
+
+    Crash story: each partition is either before or after the merge, never
+    lost; but a crashed merge can leave some touched partitions merged and
+    others not, so re-run it. Concurrency and snapshots: as
+    ``compact_store``.
 
     ``updates`` must carry every store column (plus ``delete_col`` if
     used; delete rows may leave non-key columns NULL) and at most one
     row per key. Returns ``{rows_upserted, rows_deleted,
     partitions_rewritten}`` (-1 = unpartitioned full rewrite).
     """
-    import os
-    import shutil
-    from functools import reduce
-
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    if partition_cols is None:
-        partition_cols = _discover_partition_cols(path)
     _recover_swap(path)
-    store = read_store(spark, path)
+    entry = _kept_store(spark, path)
+    if entry is None:
+        raise ValueError(f"no parquet files under {path}")
+    if partition_cols is None:
+        partition_cols = _partition_order(entry, path)
+    store = spark.read.schema(entry.schema).parquet(path)
     missing = [c for c in store.columns if c not in updates.columns]
     if missing:
         raise ValueError(f"updates is missing store columns {missing}")
 
-    dels = (
-        updates.filter(F.col(f"`{delete_col}`")) if delete_col else None
+    is_del = f"coalesce(`{delete_col}`, false)" if delete_col else "false"
+    ins = updates.filter(F.expr(f"NOT {is_del}")) if delete_col else updates
+    # the one eager job: touched partitions (typed as the store's, and as
+    # the strings Spark names their directories by), with the counts
+    dirs = ", ".join(f"cast(`{c}` as string)" for c in partition_cols)
+    touched = (
+        updates.groupBy(*[F.expr(f"cast(`{c}` as {store.schema[c].dataType.simpleString()})")
+                          .alias(c) for c in partition_cols])
+        .agg(F.expr(f"count_if(NOT {is_del}) AS __ins"), F.expr(f"count_if({is_del}) AS __del"))
+        .selectExpr("*", f"array({dirs}) AS __dirs")
+        .collect()
     )
-    ins = (
-        updates.filter(
-            ~F.coalesce(F.col(f"`{delete_col}`"), F.lit(False))
-        )
-        if delete_col
-        else updates
-    )
-    n_upserted = ins.count()
-    n_deleted = dels.count() if dels is not None else 0
+    counts = {
+        "rows_upserted": sum(r["__ins"] for r in touched),
+        "rows_deleted": sum(r["__del"] for r in touched),
+    }
+    if not touched:
+        return {**counts, "partitions_rewritten": 0}
 
-    if partition_cols:
-        touched = updates.select(*partition_cols).distinct().collect()
-        if not touched:
-            return {"rows_upserted": 0, "rows_deleted": 0, "partitions_rewritten": 0}
-        pred = reduce(
-            lambda a, b: a | b,
-            [
-                reduce(
-                    lambda x, y: x & y,
-                    [F.col(f"`{c}`") == F.lit(r[c]) for c in partition_cols],
-                )
-                for r in touched
-            ],
-        )
-        sub = store.filter(pred)
-        merged = sub.join(updates.select(key_cols), key_cols, "left_anti").unionByName(
-            ins.select(store.columns)
-        )
-        # dynamic overwrite only replaces partitions it WRITES: a touched
-        # partition whose rows were all deleted produces no output and
-        # would silently keep its old files. Find those BEFORE the write
-        # (afterwards the lineage would re-read already-replaced files).
-        remaining = {
-            tuple(r) for r in merged.select(*partition_cols).distinct().collect()
-        }
-        (
-            merged.repartition(*[F.col(f"`{c}`") for c in partition_cols])
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-        for r in touched:
-            if tuple(r) not in remaining:
-                d = os.path.join(
-                    path, *[f"{c}={r[c]}" for c in partition_cols]
-                )
-                shutil.rmtree(d, ignore_errors=True)
-        invalidate_stats(spark, path)
-        return {
-            "rows_upserted": n_upserted,
-            "rows_deleted": n_deleted,
-            "partitions_rewritten": len(touched),
-        }
-
-    merged = store.join(updates.select(key_cols), key_cols, "left_anti").unionByName(
+    rels = {_partition_dir(partition_cols, r["__dirs"]) for r in touched}
+    sub = store.filter(" OR ".join(f"({_partition_match(r)})" for r in rels)) if partition_cols else store
+    merged = sub.join(updates.select(key_cols), key_cols, "left_anti").unionByName(
         ins.select(store.columns)
     )
-    tmp, _ = _swap_paths(path)
-    merged.write.mode("overwrite").parquet(tmp)
-    _finish_swap(path)
+    if partition_cols:
+        out = merged.repartition(*[F.col(f"`{c}`") for c in partition_cols])
+        _rewrite_partitions(path, out, partition_cols, rels)
+    else:
+        tmp, _ = _swap_paths(path)
+        merged.write.mode("overwrite").parquet(tmp)
+        _finish_swap(path)
     invalidate_stats(spark, path)
-    return {
-        "rows_upserted": n_upserted,
-        "rows_deleted": n_deleted,
-        "partitions_rewritten": -1,
-    }
+    return {**counts, "partitions_rewritten": len(touched) if partition_cols else -1}
 
 
 # ------------------------------------------------------- snapshots
@@ -930,19 +947,14 @@ def merge_upsert(
 # Scope contract (documented, not hidden): snapshots compose with
 # APPEND-style writers (write_events, streaming sinks) — appends never
 # touch old files. The rewrite maintenance ops (compact_store,
-# cluster_store, merge_upsert) replace files and therefore INVALIDATE
-# older snapshots; snapshot again after maintenance. A transactional
+# cluster_store, merge_upsert) replace files, partition-scoped or not, and
+# INVALIDATE older snapshots that hold them; snapshot again after maintenance. A transactional
 # table format is the 100 TB answer when rewrites must be versioned too.
 
 
 def snapshot_store(path: str) -> int:
     """Record the store's current parquet file set as the next manifest
     version; returns the version number."""
-    import glob
-    import json
-    import os
-    import time
-
     files = sorted(
         os.path.relpath(f, path)
         for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
@@ -964,10 +976,6 @@ def snapshot_store(path: str) -> int:
 
 
 def list_snapshots(path: str) -> list[int]:
-    import glob
-    import os
-    import re
-
     out = []
     for f in glob.glob(os.path.join(path, "_manifests", "v*.json")):
         m = re.fullmatch(r"v(\d+)\.json", os.path.basename(f))
@@ -982,9 +990,6 @@ def read_snapshot(
     """Read EXACTLY the files a manifest pinned (latest version by
     default) — concurrent appends after the snapshot are invisible.
     ``basePath`` keeps ``key=value`` partition columns in the schema."""
-    import json
-    import os
-
     versions = list_snapshots(path)
     if not versions:
         raise ValueError(f"no snapshots under {path} (run snapshot_store first)")
@@ -1016,9 +1021,6 @@ def vacuum_snapshots(path: str, keep: int = 2) -> dict:
     that only dropped manifests reference. Files referenced by a kept
     manifest — or by NO manifest (in-flight appends, never snapshotted)
     — are untouched."""
-    import json
-    import os
-
     if keep < 1:
         raise ValueError(f"keep must be >= 1, got {keep}")
     versions = list_snapshots(path)
@@ -1062,8 +1064,6 @@ def store_stats(path: str, columns: list[str] | None = None) -> dict:
     mean fraction of OTHER row groups each group's [min, max] range
     overlaps (1.0 → every predicate touches every group; ~0 →
     range-clustered, pruning works)."""
-    import glob
-
     import pyarrow.parquet as pq
 
     files = sorted(glob.glob(f"{path}/**/*.parquet", recursive=True))
